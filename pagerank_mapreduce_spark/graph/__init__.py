@@ -1,4 +1,5 @@
 from pagerank_mapreduce_spark.graph.pagerank import (
+    SparseIdsError,
     out_degrees,
     pagerank,
     pagerank_oracle_sql,
@@ -11,6 +12,7 @@ from pagerank_mapreduce_spark.graph.io import format_ranks, ranks_close
 __all__ = [
     "pagerank",
     "pagerank_oracle_sql",
+    "SparseIdsError",
     "hits",
     "hits_oracle_sql",
     "out_degrees",

@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from pagerank_mapreduce_spark.graph.pagerank import check_dense_ids
+
 HITS_ITERATIONS = 20
 
 
@@ -126,8 +128,7 @@ def hits(
         ).first()
         n = int(_row["n"]) if _row["n"] is not None else 0
         m = int(_row["m"])
-    if n <= 0:
-        raise ValueError("empty graph")
+    check_dense_ids(n, m)
 
     conf = spark.conf
     saved = {

@@ -8548,12 +8548,10 @@ def _textrank_topk(
     )
     va = vocab.select(F.col("word").alias("a"), F.col("wid").alias("_sa"))
     vb = vocab.select(F.col("word").alias("b"), F.col("wid").alias("_sb"))
-    # eager checkpoint: pagerank's pre-loop runs three actions over
-    # edges (edge count, websize, the links persist) before the loop.
     # Both orientations come from ONE explode over the joined rows —
-    # the previous unionAll of two projections evaluated the
-    # cnt⋈va⋈vb subtree twice inside the checkpoint job (same rows,
-    # half the join work).
+    # a unionAll of two projections would evaluate the cnt⋈va⋈vb
+    # subtree twice (same rows, half the join work). No checkpoint:
+    # pagerank reads its input exactly once.
     edges = (
         cnt.join(va, "a")
         .join(vb, "b")
@@ -8574,7 +8572,6 @@ def _textrank_topk(
             ).alias("_e")
         )
         .select("_e.src", "_e.dst", "_e.w")
-        .localCheckpoint()
     )
     res = pagerank(
         edges,

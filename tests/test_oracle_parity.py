@@ -41,6 +41,8 @@ _FAST_EVERY = 6
 _ALWAYS_FAST = {
     "pagerank",
     "graph_ppr",
+    "graph_pagerank_weighted",
+    "text_textrank",
     "graph_betweenness",
     "graph_harmonic",
     "graph_louvain_full",

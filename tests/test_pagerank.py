@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import itertools
+import logging
 import os
 import re
 
@@ -7,7 +9,9 @@ import numpy as np
 import pytest
 
 from pagerank_mapreduce_spark.graph import (
+    SparseIdsError,
     format_ranks,
+    hits,
     out_degrees,
     pagerank,
     ranks_close,
@@ -104,6 +108,67 @@ def test_pagerank_duckdb_oracle_shapes(spark, name, edges):
     assert len(got) == len(exp)
     for g, e in zip(got, exp):
         assert g[0] == e[0] and str(g[1]) == str(e[1]), (name, g, e)
+
+
+def test_sparse_ids_fail_fast(spark):
+    # one edge 0 -> 4e9 would otherwise build a 4e9-row dense vertex
+    # relation; the size the parse job observes rejects it up front
+    df = _edges_df(spark, [(0, 4_000_000_000)])
+    with pytest.raises(SparseIdsError, match=r"max id 4000000000 with 1 edges"):
+        pagerank(df)
+    with pytest.raises(SparseIdsError, match=r"max id 4000000000 with 1 edges"):
+        hits(df)
+
+
+def test_loop_logs_one_record_per_iteration(spark, caplog):
+    logger = "pagerank_mapreduce_spark.graph.pagerank"
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        res = pagerank(_edges_df(spark, SMALL_GRAPH))
+    records = [r for r in caplog.records if r.name == logger]
+    assert len(records) == res.iterations
+    assert records[-1].args[:2] == (res.iterations, res.diff)
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_iteration_plan_shuffles_only_contributions(spark, weighted):
+    # A steady-state iteration (its rank vector is itself a checkpointed
+    # iteration) must exchange only the partial sums of the
+    # contributions and sort only the aggregated sums: the rank vector
+    # and links stay put. Aliasing the checkpointed key breaks this
+    # without changing any rank.
+    from pyspark.sql import functions as F
+
+    from pagerank_mapreduce_spark.graph.pagerank import (
+        _initial_ranks,
+        _layout_links,
+        _loop_scope,
+        _rank_exprs,
+        _stepper,
+    )
+    from pagerank_mapreduce_spark.plans.audit import (
+        _final_tree,
+        exchange_count,
+        formatted_plan,
+        join_strategies,
+    )
+
+    edges = _edges_df(spark, gen_erdos(1000))
+    if weighted:
+        edges = edges.withColumn("w", (F.col("src") % 3 + 1).cast("double"))
+    init_rank, exprs = _rank_exprs(0.85, 1000, None)
+    exprs = [e.format(norm="1.0D", one_Av="0.0D") for e in exprs]
+    with _loop_scope(spark, 500) as parts:
+        links = _layout_links(edges, parts)
+        pr = _initial_ranks(links, 1000, parts, init_rank).localCheckpoint()
+        step = _stepper(links)
+        pr = step(pr, exprs).drop("old_rank").localCheckpoint()
+        plan = formatted_plan(step(pr, exprs))
+    assert exchange_count(plan) == 1, plan
+    assert join_strategies(plan) == {"SortMergeJoin": 2}, plan
+    ops = [line.strip(" :+-|") for line in _final_tree(plan).splitlines()]
+    sorts = [i for i, op in enumerate(ops) if op.startswith("* Sort (")]
+    # the one Sort sits directly on the final contributions aggregate
+    assert len(sorts) == 1 and ops[sorts[0] + 1].startswith("* HashAggregate"), plan
 
 
 def test_out_degrees_and_websize(spark):
@@ -231,6 +296,71 @@ def test_golden_parity(spark, name):
     worst = max(abs(mine[k] - v) for k, v in golden.items())
     assert worst <= TOL, f"{name}: worst |delta| {worst}"
     assert abs(sum(mine.values()) - ranksum) <= TOL
+
+
+# The same track on any host: the named graphs come from networkx (each
+# undirected edge written once, as in the reference's test/*.txt: bull
+# has 5 edges, chvatal 24, coxeter 42) and the random families from the
+# seeded generators; the NumPy replay of mr-pr-cpp.cpp:110-180 is the
+# golden output.
+
+
+def _coxeter_edges():
+    # 28 vertices: the 3-subsets of the Fano plane's 7 points that are
+    # not lines; adjacent when disjoint (cubic, 42 edges)
+    lines = {frozenset((i + d) % 7 for d in (0, 1, 3)) for i in range(7)}
+    verts = [t for t in itertools.combinations(range(7), 3) if frozenset(t) not in lines]
+    return [
+        (i, j)
+        for (i, a), (j, b) in itertools.combinations(enumerate(verts), 2)
+        if not set(a) & set(b)
+    ]
+
+
+def _networkx_edges(name):
+    import networkx as nx
+
+    return list(getattr(nx, f"{name}_graph")().edges())
+
+
+GENERATED_GRAPHS = {
+    "bull": lambda: _networkx_edges("bull"),
+    "chvatal": lambda: _networkx_edges("chvatal"),
+    "coxeter": _coxeter_edges,
+    "cubical": lambda: _networkx_edges("cubical"),
+    "diamond": lambda: _networkx_edges("diamond"),
+    "dodecahedral": lambda: _networkx_edges("dodecahedral"),
+    "erdos-10000": lambda: gen_erdos(10000),
+    "barabasi-20000": lambda: gen_barabasi(20000),
+    "erdos-100000": lambda: gen_erdos(100000),
+    "barabasi-100000": lambda: gen_barabasi(100000),
+}
+
+
+def test_coxeter_construction():
+    edges = _coxeter_edges()
+    deg = np.bincount(np.array(edges).ravel())
+    assert len(edges) == 42 and len(deg) == 28 and set(deg) == {3}
+
+
+@pytest.mark.parametrize("name", list(GENERATED_GRAPHS))
+def test_golden_generated(spark, tmp_path, name):
+    edges = GENERATED_GRAPHS[name]()
+    path = tmp_path / f"{name}.txt"
+    path.write_text("".join(f"{s} {d}\n" for s, d in edges))
+    res = pagerank(read_edge_list(spark, str(path)))
+    out = tmp_path / "ranks"
+    format_ranks(res.ranks).coalesce(1).write.text(str(out))
+    (part,) = out.glob("part-*")
+    lines = part.read_text().splitlines()
+    expected, iterations = pagerank_oracle(edges)
+    assert res.iterations == iterations
+    assert len(lines) == len(expected) + 1
+    for i, (line, exp) in enumerate(zip(lines, expected)):
+        key, _, val = line.partition(" = ")
+        assert int(key) == i and abs(float(val) - exp) <= TOL, (name, line, exp)
+    key, _, val = lines[-1].partition(" = ")
+    assert key == "s" and abs(float(val) - expected.sum()) <= TOL
 
 
 def test_personalized_pagerank_matches_numpy(spark):
